@@ -36,23 +36,34 @@ def main() -> None:
     # Reuse disclosure (VERDICT r15 #3, additions-only): tag each query
     # with the session-memo and on-disk-stage activity inside its timed
     # window, so the side file separates compute from cache hits without
-    # forensics. "b" = memo builds, "h" = memo hits, "s" = stage builds.
+    # forensics. "b" = memo builds, "h" = memo hits, "s" = stage builds,
+    # "c" = whole-stage/expression classes Spark compiled (codegen cache
+    # misses): a warm query with a "c" tag is recompiling, not reusing.
     from ting_data_etl_spark import runstats
+
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def snapshot() -> dict[str, int]:
+        return {
+            **runstats.snapshot(),
+            "codegen_compile": codegen.METRIC_COMPILATION_TIME().getCount(),
+        }
 
     def run_all(reuse_out: dict[str, dict[str, int]]) -> dict[str, float]:
         out: dict[str, float] = {}
         for name in sorted(qs):
-            before = runstats.snapshot()
+            before = snapshot()
             t0 = time.time()
             qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
             out[name] = round(time.time() - t0, 3)
-            after = runstats.snapshot()
+            after = snapshot()
             delta = {
                 tag: after[k] - before.get(k, 0)
                 for k, tag in (
                     ("memo_build", "b"),
                     ("memo_hit", "h"),
                     ("stage_build", "s"),
+                    ("codegen_compile", "c"),
                 )
                 if after.get(k, 0) != before.get(k, 0)
             }
@@ -126,7 +137,8 @@ def main() -> None:
                 "cold_total_sec": round(sum(cold.values()), 3),
                 "sf": sf_val,
                 # reuse disclosure (additions-only): per-query memo/stage
-                # activity (b=memo builds, h=memo hits, s=stage builds)
+                # activity (b=memo builds, h=memo hits, s=stage builds,
+                # c=codegen compiles)
                 # and whether this RUN built any on-disk stages at all —
                 # stages_fresh=false means every staged index/layout was
                 # served warm from a previous process on this host, so

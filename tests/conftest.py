@@ -2,11 +2,13 @@
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -18,13 +20,11 @@ def _self_heal_precommit_guard() -> None:
     container boundary; any pytest run now re-installs it idempotently so
     a fresh environment cannot commit a torn rotation plan un-ritualized.
     """
-    import os
     import subprocess
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    hook = os.path.join(repo, ".git", "hooks", "pre-commit")
-    guard = os.path.join(repo, "tools", "precommit_rotation_guard.py")
-    if not os.path.isdir(os.path.join(repo, ".git")) or not os.path.exists(guard):
+    hook = os.path.join(REPO, ".git", "hooks", "pre-commit")
+    guard = os.path.join(REPO, "tools", "precommit_rotation_guard.py")
+    if not os.path.isdir(os.path.join(REPO, ".git")) or not os.path.exists(guard):
         return
     try:
         if os.path.exists(hook):
@@ -36,7 +36,7 @@ def _self_heal_precommit_guard() -> None:
         # leaves the repo committable un-ritualized with no trace)
         print(
             "[conftest] installing rotation pre-commit guard "
-            f"({os.path.relpath(guard, repo)} --install)",
+            f"({os.path.relpath(guard, REPO)} --install)",
             file=sys.stderr,
         )
         subprocess.run(

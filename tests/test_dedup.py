@@ -162,6 +162,32 @@ class TestConnectedComponents:
         }
         assert got == {0: 0, 1: 1, 2: 2}
 
+    def test_frees_only_its_own_checkpoints(self, spark, monkeypatch):
+        """A checkpoint another driver thread makes while one of the loop's
+        checkpoint jobs runs (the capstone builds its two inputs on two
+        threads) is not the loop's to free: its blocks must outlive the
+        loop."""
+        from ting_data_etl_spark.operators.dedup import connected_components
+
+        df_cls = type(spark.range(1))
+        checkpoint = df_cls.localCheckpoint
+        other = []
+
+        def checkpoint_beside_another(self, *args, **kwargs):
+            if not other:
+                other.append(
+                    checkpoint(spark.range(50).selectExpr("id * 2 AS v"), True)
+                )
+            return checkpoint(self, *args, **kwargs)
+
+        monkeypatch.setattr(df_cls, "localCheckpoint", checkpoint_beside_another)
+        nodes = spark.createDataFrame([(i,) for i in range(1, 5)], "doc_id long")
+        pairs = spark.createDataFrame(
+            [(1, 2), (3, 4)], "doc_a long, doc_b long"
+        )
+        connected_components(nodes, pairs).collect()
+        assert len(other[0].collect()) == 50
+
 
 class TestPointerJumpCC:
     def test_matches_label_propagation(self, spark):

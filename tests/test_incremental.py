@@ -720,6 +720,41 @@ def test_arrival_gate_small_drop_prunes_index_scan(spark, sf_dir):
     assert re.search(r"PushedFilters: \[In\(band", plan), plan[:2000]
 
 
+def test_arrival_gate_restores_session_when_batch_body_raises(
+    spark, sf_dir, monkeypatch
+):
+    """A raise anywhere after the micro-batch persist (here: the small-drop
+    localCheckpoint, the known CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND site) must
+    still restore the AQE setting the gate turned off and release the
+    persisted batch."""
+    from ting_data_etl_spark.operators.incremental import (
+        streaming_incremental_arrival_gate,
+    )
+
+    df_cls = type(spark.range(1))
+    persist = df_cls.persist
+    persisted, gate_sessions = [], []
+
+    def recording_persist(self, *args, **kwargs):
+        out = persist(self, *args, **kwargs)
+        persisted.append(out)
+        return out
+
+    def failing_checkpoint(self, *args, **kwargs):
+        gate_sessions.append(self.sparkSession)
+        raise RuntimeError("injected localCheckpoint failure")
+
+    monkeypatch.setattr(df_cls, "persist", recording_persist)
+    monkeypatch.setattr(df_cls, "localCheckpoint", failing_checkpoint)
+    with pytest.raises(Exception, match="injected localCheckpoint failure"):
+        streaming_incremental_arrival_gate(spark, sf_dir)
+    assert gate_sessions, "the small-drop path was not taken"
+    # the batch body runs in the stream's session, not the caller's
+    prior = spark.conf.get("spark.sql.adaptive.enabled")
+    assert gate_sessions[0].conf.get("spark.sql.adaptive.enabled") == prior
+    assert not persisted[-1].storageLevel.useMemory
+
+
 def test_bucketed_index_survives_purge_under_live_session(spark, sf_dir):
     """purge_stages deletes stage FILES but not the session catalog's
     table entry — the index helper must detect the dangling registration

@@ -1223,41 +1223,22 @@ SELECT doc_id, component FROM labeled
 """
 
 
-def _persistent_rdd_ids(spark) -> set[int]:
-    """Ids of every RDD currently persisted in the block manager."""
-    m = spark.sparkContext._jsc.getPersistentRDDs()
-    return {int(k) for k in m.keySet().toArray()}
-
-
-#: Serializes the snapshot→checkpoint→snapshot window below. The id diff is
-#: only a correct attribution if no OTHER thread persists an RDD inside that
-#: window — two clustering loops running concurrently (e.g. the minhash and
-#: ensemble staged builds) would otherwise attribute each other's checkpoint
-#: blocks and destroy them at the next generation swap, and localCheckpoint
-#: blocks are unrecoverable once unpersisted (lineage is truncated).
-import threading as _threading
-
-_CHECKPOINT_LOCK = _threading.Lock()
-
-
 def _tracked_checkpoint(df: DataFrame) -> tuple[DataFrame, set[int]]:
-    """``localCheckpoint(eager=True)`` + the exact RDD ids it persisted.
+    """``localCheckpoint(eager=True)`` + the id of the RDD it persisted.
 
-    Diffs the persistent-RDD id set immediately around the checkpoint call
-    (under ``_CHECKPOINT_LOCK``, so concurrent callers of THIS helper can
-    never cross-attribute), so the caller learns precisely which blocks
-    belong to this generation. The clustering loops below free superseded
+    The id is read from the checkpoint's own plan (a ``LogicalRDD`` over
+    the persisted RDD), so the caller learns exactly which blocks belong
+    to this generation. The clustering loops below free superseded
     generations by unpersisting ONLY ids they created themselves — never a
-    global sweep. Residual scope: a concurrent ``persist()``/checkpoint
-    issued by code outside this module during the (held-lock) checkpoint
-    job would still land in the diff; within this module every iterative
-    loop routes through this helper, which is the hazard that matters.
+    global sweep. The id must not come from a diff of the session's
+    persistent-RDD set around the checkpoint job: another driver thread
+    (the capstone builds its two inputs on two threads) can persist inside
+    that window, and unpersisting its RDD at the next generation swap
+    destroys that thread's checkpoint blocks
+    (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND).
     """
-    spark = df.sparkSession
-    with _CHECKPOINT_LOCK:
-        before = _persistent_rdd_ids(spark)
-        out = df.localCheckpoint(eager=True)
-        return out, _persistent_rdd_ids(spark) - before
+    out = df.localCheckpoint(eager=True)
+    return out, {out._jdf.queryExecution().analyzed().rdd().id()}
 
 
 def _unpersist_ids(spark, ids: set[int]) -> None:

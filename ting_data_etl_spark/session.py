@@ -18,6 +18,24 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: OPTIMIZATION: entries in Spark's generated-class cache
+#: (``spark.sql.codegen.cache.maxEntries``; static, so it rides the
+#: builder and is not in _tuned_defaults). Spark's default of 100 is below
+#: ONE execution of either pipeline: a store-reports execution compiles
+#: ~165 whole-stage/expression classes and a corpus final selection plus
+#: manifest ~203, so every class was evicted before its reuse and each
+#: repeat execution recompiled all of them with Janino (and the JIT then
+#: compiled the freshly loaded classes again). The widest working set is
+#: the full 161-query registry: one cold bench.py pass at sf0.001 with an
+#: unbounded cache compiled 2166 classes. 4096 is ~1.9x that; the cap
+#: must clear the working set, not approach it, because the cache is LRU
+#: in 4 segments (1024 each here) and a cyclic pass over more classes than
+#: a segment holds evicts each one before it comes round again. A repeat
+#: execution of either pipeline now compiles 0-6 classes (AQE renumbering
+#: of otherwise identical whole-stage classes).
+CODEGEN_CACHE_ENTRIES = 4096
+
+
 def _tuned_defaults(shuffle_partitions: int) -> dict[str, str]:
     """The runtime-settable tuned defaults — ONE list, applied both to the
     builder (fresh session) and via conf.set (reused session), so the two
@@ -100,6 +118,9 @@ def get_spark(
         # long-running drivers, not a local-only trick (static conf:
         # must be set before the context starts, so it rides the builder).
         .config("spark.cleaner.periodicGC.interval", "5min")
+        .config(
+            "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES)
+        )
         # The periodic cleaner calls System.gc(): on JDK 17's default G1
         # that is a FULL stop-the-world collection — multi-second on a 16g
         # heap full of checkpoint/broadcast blocks, charged to whichever
